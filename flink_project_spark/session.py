@@ -17,15 +17,77 @@ multi-executor cluster at ~100 TB:
   (flink-statistics ActionLogJobSecond.java:226) is expressed explicitly
   as a window offset instead of an ambient JVM timezone.
 - Arrow enabled: every Pandas-UDF boundary is Arrow-batched.
+- Driver heap (``spark.driver.memory``): ``$SPARK_GRAFT_DRIVER_MEM``
+  verbatim when set (e.g. ``4g``). Otherwise half of the host's memory,
+  rounded down to whole GiB, capped at 48g and at least 1g. The host's
+  memory is the physical RAM, or the cgroup memory limit where one is
+  set and smaller. Locally the driver JVM is the only Spark process;
+  the other half is left for the JVM's off-heap memory (~1.5 GB at a
+  7g heap), the Python process, pandas and DuckDB. A heap larger than
+  the host lets the JVM grow until the kernel kills it. The resolved
+  heap and its inputs are logged (INFO, this module's logger) when
+  ``get_spark`` launches the JVM.
 """
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_GIB = 1 << 30
+# the heap every host got before the default was sized to the host;
+# hosts with 96 GiB or more keep it
+_MAX_DEFAULT_HEAP_GIB = 48
+# cgroup v2, then v1; v1 reports "no limit" as ~2**63
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+_log = logging.getLogger(__name__)
+
+
+def _host_memory() -> tuple[int, int | None]:
+    """(physical memory, cgroup memory limit or None), in bytes."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        # "max" (v2) or a v1 sentinel past any real memory: no limit
+        if raw.isdigit() and int(raw) < 1 << 60:
+            return physical, int(raw)
+        break
+    return physical, None
+
+
+def _default_driver_memory(physical: int, cgroup_limit: int | None) -> str:
+    """Half the host's memory in whole GiB, within [1g, 48g]."""
+    host = physical if cgroup_limit is None else min(physical, cgroup_limit)
+    return f"{max(1, min(_MAX_DEFAULT_HEAP_GIB, host // 2 // _GIB))}g"
+
+
+def _driver_memory() -> str:
+    """``spark.driver.memory`` for a new JVM; logs the value and its inputs."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or None
+    physical, cgroup_limit = _host_memory()
+    heap = override or _default_driver_memory(physical, cgroup_limit)
+    _log.info(
+        "spark driver heap %s (SPARK_GRAFT_DRIVER_MEM=%s, physical %.1f GiB, "
+        "cgroup limit %s)",
+        heap,
+        override,
+        physical / _GIB,
+        "none" if cgroup_limit is None else f"{cgroup_limit / _GIB:.1f} GiB",
+    )
+    return heap
 
 
 def get_spark(
@@ -37,7 +99,8 @@ def get_spark(
     """Create (or fetch) the tuned SparkSession.
 
     Note: JVM-level options (driver memory) only take effect on the first
-    session created in the process.
+    session created in the process, so the heap is resolved (and logged)
+    only when the call launches the JVM.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -58,8 +121,6 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # local-mode memory: single JVM, driver is the only process
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # driver testdata stores events.ts as parquet TIMESTAMP(NANOS) which
@@ -73,7 +134,7 @@ def get_spark(
     # broker + network. "1"/"true" selects the coordinate matching the
     # running pyspark; any other value is used as the coordinate
     # verbatim. Only effective on the FIRST session in the process
-    # (jars are a JVM-level option), like driver memory above.
+    # (jars are a JVM-level option), like driver memory below.
     kafka_pkg = os.environ.get("SPARK_GRAFT_KAFKA_PACKAGE")
     if kafka_pkg:
         if kafka_pkg.lower() in ("1", "true", "yes"):
@@ -90,6 +151,11 @@ def get_spark(
                 + pyspark.__version__
             )
         builder = builder.config("spark.jars.packages", kafka_pkg)
+    # local-mode memory: single JVM, driver is the only process. The heap
+    # is fixed when the py4j gateway launches the JVM; a session stopped
+    # and created again in the same process keeps that JVM and its heap.
+    if SparkContext._gateway is None:
+        builder = builder.config("spark.driver.memory", _driver_memory())
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
