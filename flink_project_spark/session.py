@@ -26,7 +26,8 @@ multi-executor cluster at ~100 TB:
   7g heap), the Python process, pandas and DuckDB. A heap larger than
   the host lets the JVM grow until the kernel kills it. The resolved
   heap and its inputs are logged (INFO, this module's logger) when
-  ``get_spark`` launches the JVM.
+  ``get_spark`` launches the JVM, and the test suite prints the same
+  line in its report header.
 """
 
 from __future__ import annotations
@@ -74,19 +75,23 @@ def _default_driver_memory(physical: int, cgroup_limit: int | None) -> str:
     return f"{max(1, min(_MAX_DEFAULT_HEAP_GIB, host // 2 // _GIB))}g"
 
 
-def _driver_memory() -> str:
-    """``spark.driver.memory`` for a new JVM; logs the value and its inputs."""
+def resolve_driver_memory() -> tuple[str, str]:
+    """(``spark.driver.memory`` for a new JVM, a line naming it and its
+    inputs). Probes the host only; starts no JVM."""
     override = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or None
     physical, cgroup_limit = _host_memory()
     heap = override or _default_driver_memory(physical, cgroup_limit)
-    _log.info(
-        "spark driver heap %s (SPARK_GRAFT_DRIVER_MEM=%s, physical %.1f GiB, "
-        "cgroup limit %s)",
-        heap,
-        override,
-        physical / _GIB,
-        "none" if cgroup_limit is None else f"{cgroup_limit / _GIB:.1f} GiB",
+    limit = "none" if cgroup_limit is None else f"{cgroup_limit / _GIB:.1f} GiB"
+    return heap, (
+        f"spark driver heap {heap} (SPARK_GRAFT_DRIVER_MEM={override}, "
+        f"physical {physical / _GIB:.1f} GiB, cgroup limit {limit})"
     )
+
+
+def _driver_memory() -> str:
+    """``spark.driver.memory`` for a new JVM; logs the value and its inputs."""
+    heap, line = resolve_driver_memory()
+    _log.info("%s", line)
     return heap
 
 

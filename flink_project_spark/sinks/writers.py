@@ -1,12 +1,18 @@
 """Batch & streaming sinks — SURVEY.md §2.2 (K1-K8).
 
 The reference's record-at-a-time connector sinks (Redis/HBase/ES/JDBC
-OutputFormats) become either native writers or `foreachPartition` /
-`foreachBatch` with a pluggable key-value client. A deterministic
-in-memory KV store stands in for Redis/HBase in tests — the engine-side
-contract (batched writes, per-partition connections, idempotent upserts,
-TTL/truncation policy) is the real, tested part; the network client is
-injected.
+OutputFormats) become either native writers or KV writes through a
+pluggable key-value client. The batch sinks (`write_kv_hash`,
+`write_kv_lists`, `write_es_documents`) publish whole tables from the
+executors, one client per partition. The micro-batch upsert
+(`foreach_batch_kv_upsert`) writes from the driver through one client,
+after one parallel `collect()` of the rows the trigger changed: a
+`foreachBatch` function already runs on the driver once per trigger, and
+a Python task per state partition would cost more than the writes. A
+deterministic file-backed KV store stands in for Redis/HBase in tests —
+the engine-side contract (batched writes, client lifecycle, idempotent
+upserts, TTL/truncation policy) is the real, tested part; the network
+client is injected.
 """
 
 from __future__ import annotations
@@ -322,11 +328,12 @@ class FileKVStore:
     - HBase Put(rowkey, cf:qual, v) (flink-process outputformat/
                                      HBaseOutputFormat.java:35-45)
 
-    File-backed (not in-memory) because PySpark's foreachPartition runs
-    in separate Python worker *processes* — executor-side writes must be
-    visible to the driver. Per-key atomic rename = last-writer-wins,
-    exactly Redis semantics for DEL+RPUSH. In production the factory
-    injects a real network client instead.
+    File-backed (not in-memory) because the batch sinks' foreachPartition
+    runs in separate Python worker *processes* — their executor-side
+    writes must be visible to the driver, which reads the store and
+    which itself writes the streaming upserts. Per-key atomic rename =
+    last-writer-wins, exactly Redis semantics for DEL+RPUSH. In
+    production the factory injects a real network client instead.
     """
 
     def __init__(self, root: str) -> None:
@@ -507,8 +514,17 @@ def foreach_batch_kv_upsert(
     produce DIFFERENT store keys (a plain concat_ws would collide them,
     silently overwriting a different logical key's value on replay).
     Rows whose value is NULL are skipped (documented no-op: a KV upsert
-    with no value; a NULL reaching the store client would kill the
-    micro-batch mid-partition).
+    with no value; a NULL reaching the store client would fail the
+    micro-batch).
+
+    Writes run on the driver: one parallel `collect()` of the escaped
+    (key, value) projection, then one `put` per row through one client.
+    Nothing is written until that action has succeeded, so a failed task
+    never leaves half a micro-batch in the store. Driver memory holds
+    only the rows one trigger changed (update mode), and
+    `spark.driver.maxResultSize` bounds them: a trigger whose rows exceed
+    it aborts the collect job, and with it the query, before anything is
+    written. The batch sinks above stay executor-side.
     """
 
     def _esc(c: str):
@@ -520,17 +536,17 @@ def foreach_batch_kv_upsert(
         return F.coalesce(e, F.lit("\\N"))
 
     def _fn(batch_df: DataFrame, epoch_id: int) -> None:
-        rows = batch_df.filter(F.col(value_col).isNotNull()).select(
-            F.concat_ws("|", *[_esc(c) for c in key_cols]).alias("k"),
-            F.col(value_col).cast("string").alias("v"),
+        rows = (
+            batch_df.filter(F.col(value_col).isNotNull())
+            .select(
+                F.concat_ws("|", *[_esc(c) for c in key_cols]).alias("k"),
+                F.col(value_col).cast("string").alias("v"),
+            )
+            .collect()
         )
-
-        def _write(it: Iterable[Row]) -> None:
-            client = get_kv_store(store_name)
-            for row in it:
-                client.put(row["k"], qualifier, row["v"])
-
-        rows.foreachPartition(_write)
+        client = get_kv_store(store_name)
+        for k, v in rows:
+            client.put(k, qualifier, v)
 
     return _fn
 

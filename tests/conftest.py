@@ -16,10 +16,22 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_project_spark import fixtures as FX
-from flink_project_spark.session import get_spark
+from flink_project_spark.session import get_spark, resolve_driver_memory
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def pytest_report_header(config):
+    # the heap the session fixture's JVM will get, shown before any
+    # test runs: an OOM-killed run otherwise shows only connection errors
+    return resolve_driver_memory()[1]
+
+
+def pytest_terminal_summary(terminalreporter):
+    # -q hides the header; print the line in the closing summary instead
+    if terminalreporter.verbosity < 0:
+        terminalreporter.write_line(pytest_report_header(None))
 
 
 @pytest.fixture(scope="session")

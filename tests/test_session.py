@@ -10,6 +10,7 @@ import logging
 import pytest
 
 from flink_project_spark import session as S
+from tests.conftest import pytest_report_header
 
 GIB = 1 << 30
 
@@ -81,6 +82,8 @@ def test_resolution_logs_heap_and_inputs(host, monkeypatch, caplog):
     (msg,) = [r.getMessage() for r in caplog.records]
     assert "5g" in msg and "16.0 GiB" in msg and "10.0 GiB" in msg
     assert "SPARK_GRAFT_DRIVER_MEM=None" in msg
+    # the test suite's report header prints the same line
+    assert pytest_report_header(None) == msg
 
     caplog.clear()
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "4g")

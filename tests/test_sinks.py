@@ -5,6 +5,7 @@ HSET hash writes, idempotent foreachBatch-style upserts.
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import functions as F
@@ -68,6 +69,99 @@ def test_foreach_batch_upsert_idempotent(spark):
     fn(df, epoch_id=0)  # replay
     assert store.hashes == first
     assert store.hashes["s1|w1"]["v"] == "10"
+
+
+def test_foreach_batch_upsert_in_watermarked_stream(spark, tmp_path):
+    """T12 wired into a real `foreachBatch`: a file stream feeds a
+    watermarked update-mode day count over 8 state partitions, in two
+    slices, so the sink also runs on the watermark-advance (no-data)
+    batches. The store must hold the batch answer, and replaying the
+    last data epoch after a crash before its commit must not change it."""
+    import json
+    import shutil
+
+    from flink_project_spark.streaming import windows as SW
+
+    watch, staging = tmp_path / "in", tmp_path / "staging"
+    watch.mkdir()
+    staging.mkdir()
+    # slice 2 starts two days after slice 1 ends: no row is late
+    types = ["click", "view", "a|b"]
+    slices = [
+        [
+            {"ts": f"2024-01-{d:02d}T{h:02d}:30:00Z", "event_type": types[(d + h) % 3]}
+            for d in days
+            for h in range(24)
+        ]
+        for days in ((1, 2), (4, 5))
+    ]
+    store_name = f"t_{time.time_ns()}"
+    upsert = WR.foreach_batch_kv_upsert(
+        ["window_start", "event_type"], "cnt", store_name=store_name
+    )
+    epochs: list[int] = []
+
+    def sink(df, epoch_id):
+        epochs.append(epoch_id)
+        upsert(df, epoch_id)
+
+    ckpt = str(tmp_path / "ckpt")
+    schema = "ts timestamp, event_type string"
+
+    def start():
+        stream = spark.readStream.schema(schema).json(str(watch))
+        counts = SW.tumbling_stream(
+            stream, "ts", "1 day", ["event_type"], "1 hour", value_col=None
+        )
+        return (
+            counts.writeStream.outputMode("update")
+            .foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+
+    q = start()
+    try:
+        for i, rows in enumerate(slices):
+            tmp = staging / f"slice_{i}.json"
+            tmp.write_text("".join(json.dumps(r) + "\n" for r in rows))
+            tmp.rename(watch / tmp.name)
+            q.processAllAvailable()
+        data_epochs = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    assert len(data_epochs) == 2
+    assert set(epochs) - set(data_epochs), "no no-data batch reached the sink"
+
+    events = spark.read.schema(schema).json(str(watch))
+    expected = {
+        "{}|{}".format(r.ws, r.event_type.replace("|", "\\|")): {"v": str(r["count"])}
+        for r in events.groupBy(
+            F.window("ts", "1 day").start.cast("string").alias("ws"), "event_type"
+        )
+        .count()
+        .collect()
+    }
+    store = WR.get_kv_store(store_name)
+    assert store.hashes == expected and len(expected) == 12
+
+    # crash after the sink wrote the last data epoch, before its commit:
+    # the restart replays that epoch (and its no-data follow-up)
+    last = data_epochs[-1]
+    for log in ("commits", "offsets"):
+        for f in os.listdir(os.path.join(ckpt, log)):
+            n = int(f.lstrip(".").split(".")[0])
+            if n > last or (log == "commits" and n == last):
+                os.remove(os.path.join(ckpt, log, f))
+    epochs.clear()
+    q = start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert last in epochs
+    assert store.hashes == expected
+    shutil.rmtree(store.root, ignore_errors=True)
 
 
 def test_csv_text_roundtrip(spark, tmp_path):

@@ -22,16 +22,12 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else ".scaling/sf10-open"
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 
-    from pyspark.sql import SparkSession
-
     from flink_project_spark.llm import curation as CUR
-    from flink_project_spark.session import spread
+    from flink_project_spark.session import get_spark, spread
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.cpu_count()}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
+    # the engine's session: its driver heap is sized to the host
+    spark = get_spark(
+        app_name="ab_decon_gramkey", cpus=os.cpu_count(), shuffle_partitions=32
     )
     spark.sparkContext.setLogLevel("ERROR")
 
