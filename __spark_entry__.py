@@ -1343,9 +1343,9 @@ def _neighbor_lists10(spark: SparkSession, sf_dir: str) -> DataFrame:
     itemcf_histogram consume the identical table (the reference emits
     the quDuan histogram alongside the published lists in the same job,
     ItemIdCfVersion5.java:242-278)."""
-    # pre-truncate (rows cut to top-k before any collect_list) is the
-    # default; the salted two-phase variant stays an opt-in escape hatch
-    # for hot keys (see neighbor_lists docstring for the r2 lesson)
+    # pre-truncate (rows cut to top-k by one plain window before any
+    # collect_list) is the default; see the neighbor_lists docstring for
+    # why the salted two-phase cut is not used here (the r2 lesson)
     return CACHE.materialize(
         spark,
         f"itemcf_lists:{sf_dir}",

@@ -11,8 +11,8 @@ The operators a 100 TB corpus build needs beyond dedup/similarity:
 - `source_quota`: cap documents per source/domain (anti-domination —
   one crawl domain must not swamp the mixture). Per-group top-K by a
   deterministic preference order; the skew story is the same as
-  neighbor-list truncation (operators/setops.py): plain window by
-  default, `top_k_per_group_salted` as the hot-domain escape hatch.
+  neighbor-list truncation (operators/setops.py): one plain window;
+  `setops.top_k_per_group_salted` is the library's hot-key top-K.
 - `decontaminate`: remove corpus documents whose fingerprints collide
   with a held-out benchmark set (train/test contamination). The join
   shape is the scale-critical part: OR-matching on two fingerprint
@@ -73,30 +73,15 @@ def source_quota(
     docs: DataFrame,
     quota: int,
     by: str = "source",
-    salted: bool = False,
 ) -> DataFrame:
     """Keep at most `quota` documents per `by` group, preferring longer
     documents (n_chars DESC, doc_id ASC tie-break — a total order, so
-    the kept set is deterministic).
-
-    Plain per-group window by default; `salted=True` switches to the
-    two-phase partial/final truncation for hot domains (same trade-off
-    as neighbor-list top-K — see operators/setops.py).
+    the kept set is deterministic). One plain per-group window, the
+    same shape as neighbor-list top-K (operators/setops.py).
     """
-    from flink_project_spark.operators.setops import (
-        top_k_per_group,
-        top_k_per_group_salted,
-    )
+    from flink_project_spark.operators.setops import top_k_per_group
 
     slim = docs.select("doc_id", by, "n_chars")
-    if salted:
-        return top_k_per_group_salted(
-            slim.withColumn("_neg", -F.col("n_chars")),
-            [by],
-            ["_neg", "doc_id"],
-            quota,
-            ascending=True,
-        ).drop("_neg")
     return top_k_per_group(
         slim, [by], [F.col("n_chars").desc(), F.col("doc_id").asc()], quota
     )
@@ -573,9 +558,8 @@ def token_budget_sample(
     ~budget/n_buckets tokens (remainder spread one token-budget unit
     at a time over the first buckets), windows run per (group, bucket)
     — parallelism × n_buckets — and the union keeps per-group totals
-    within one crossing doc PER BUCKET of the exact budget. Same
-    trade-off as `source_quota(salted=True)`: exactness within
-    n_buckets crossing-docs, bounded skew.
+    within one crossing doc PER BUCKET of the exact budget: exactness
+    within n_buckets crossing-docs traded for bounded skew.
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
@@ -660,7 +644,6 @@ def decontaminate_overlap(
     min_overlap: float = 0.5,
     text_col: str = "text",
     expected_docs: int | None = None,
-    gram_key: str = "md5",
 ) -> DataFrame:
     """N-gram-overlap decontamination — the stronger, quantified form of
     `decontaminate`: for each (corpus doc, benchmark doc) pair report
@@ -693,22 +676,6 @@ def decontaminate_overlap(
     reference-parity small corpora, the published 8-gram width past
     the measured saturation threshold, where 3-gram match volume is
     quadratic in corpus size (SCALING_r6.json n-sweep).
-
-    ``gram_key``: "md5" (default, bit-exact oracle parity) or "int64"
-    — the shared 60-bit md5-prefix long (`dedup.shingle_hashes` /
-    `hashing.v60`), which moves a quarter of the bytes through the
-    intersection join's shuffle. Counts are unchanged on any
-    collision-free corpus (same analysis as `_positional_grams`: a
-    60-bit collision can only ADD a spurious match — ~4x10^5 expected
-    colliding pairs at 10^12 distinct grams, noise-level); the
-    equivalence test pins identical output vs the md5 key. Measured
-    honestly: the LOCAL A/B at sf10-open/n=8 is a wash (md5 24.3 s vs
-    int64 26.0 s min-of-2, identical 10,777 rows —
-    tools/ab_decon_gramkey.py), because v60 computes the same md5
-    before truncating and a local shuffle is memory-speed; the flag
-    pays off only where shuffle bytes cross a network, so the default
-    stays md5 even at scale and this knob is for bandwidth-bound
-    clusters specifically.
     """
     if n == "auto":
         n = auto_decon_ngram(expected_docs)
@@ -725,8 +692,8 @@ def decontaminate_overlap(
     # corpus once just to re-apply the guarantee
     from pyspark.sql.window import Window
 
-    sc = DD.shingle_hashes(corpus, text_col, n, gram_key=gram_key)
-    sb = DD.shingle_hashes(benchmark, text_col, n, gram_key=gram_key).select(
+    sc = DD.shingle_hashes(corpus, text_col, n)
+    sb = DD.shingle_hashes(benchmark, text_col, n).select(
         F.col("doc_id").alias("bench_id"), "hx"
     )
     # The denominator rides the gram rows as a window count instead of

@@ -130,8 +130,7 @@ def minhash_coeffs(k: int) -> tuple[list[int], list[int]]:
 
 
 def shingle_hashes(
-    docs: DataFrame, text_col: str = "text", n: int = 3,
-    gram_key: str = "md5",
+    docs: DataFrame, text_col: str = "text", n: int = 3
 ) -> DataFrame:
     """(doc_id, hx) — one row per distinct shingle, hx = md5(shingle).
 
@@ -139,25 +138,7 @@ def shingle_hashes(
     pipeline: signatures derive v32 from hx, and the exact-Jaccard
     verify stage counts pair intersections by equi-joining hx — both
     without ever shuffling the shingle strings themselves.
-
-    ``gram_key``: "md5" (default) keeps the full 32-hex-char key for
-    bit-exact oracle parity; "int64" emits the shared 60-bit md5-prefix
-    LONG (`hashing.v60`) instead — same flag, same collision analysis,
-    and the same reason as `_positional_grams`: an equi-join/shuffle on
-    8-byte longs moves a quarter of the bytes of one on md5 hex
-    strings. MinHash signature derivation requires the md5 form (v32
-    parses hex chars 0:8), so the MinHash pipeline always uses the
-    default; the int64 key is for pure intersection-join consumers
-    (`curation.decontaminate_overlap`).
     """
-    if gram_key == "md5":
-        key = F.md5(F.col("sh"))
-    elif gram_key == "int64":
-        from flink_project_spark.llm.hashing import v60
-
-        key = v60(F.col("sh"))
-    else:
-        raise ValueError(f"gram_key must be md5|int64, got {gram_key!r}")
     # words materialized as a column FIRST (see _grams_from_words)
     base = docs.select("doc_id", words(F.col(text_col)).alias("_ws")).filter(
         # zero-word docs emit NO shingles (see shingle_array: avoids
@@ -170,7 +151,7 @@ def shingle_hashes(
             "doc_id", _grams_from_words(F.col("_ws"), n).alias("shingles")
         )
         .select("doc_id", F.explode("shingles").alias("sh"))
-        .select("doc_id", key.alias("hx"))
+        .select("doc_id", F.md5(F.col("sh")).alias("hx"))
     )
 
 
@@ -823,42 +804,6 @@ def auto_simhash_config(
     return 60, 3
 
 
-def simhash(text: Column, bits: int = 32) -> Column:
-    """SimHash over word tokens (multiset-weighted bit majority).
-
-    For each bit j: sum over word occurrences of +/-1 according to bit j
-    of v32(md5(word)); simhash bit j = 1 if the sum > 0. Returned as a
-    LongType value. Pure array expression — no shuffle, no Python.
-    NOTE: HOF folds evaluate interpreted per element; use this form when
-    a single-pass projection is required (e.g. inside a streaming map).
-    For batch corpora `doc_simhash` computes the identical value through
-    an explode -> codegen'd bit-sum aggregate, which is faster.
-    ``bits`` as in `doc_simhash` (> 32 switches to the 60-bit word
-    hash; 32-bit signatures saturate beyond ~10^4 docs).
-    """
-    validate_simhash_knobs(bits, None)
-    w = words(text)
-    hash_fn = v32 if bits <= 32 else v60
-    hashes = F.transform(w, lambda x: hash_fn(x))
-    zeros = F.array_repeat(F.lit(0), bits)
-    pow2 = F.array(*[F.lit(2**j).cast("long") for j in range(bits)])
-    bit_vec = lambda h: F.transform(  # noqa: E731
-        pow2,
-        lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-    )
-    # one pass: fold word-hash bit vectors into a 32-wide sum array
-    sums = F.aggregate(
-        hashes, zeros, lambda acc, h: F.zip_with(acc, bit_vec(h), lambda a, b: a + b)
-    )
-    return F.aggregate(
-        F.zip_with(
-            sums, pow2, lambda s, wgt: F.when(s > 0, wgt).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def simhash_from_hashes(
     ids: DataFrame, hashed: DataFrame, bits: int = 32
 ) -> DataFrame:
@@ -1388,31 +1333,15 @@ def simhash_cross_matches(
 # ---------------------------------------------------------------------------
 
 
-def _positional_grams(
-    docs: DataFrame, n: int, text_col: str, gram_key: str = "md5"
-) -> DataFrame:
+def _positional_grams(docs: DataFrame, n: int, text_col: str) -> DataFrame:
     """(doc_id, n_tok, pos, h) — hash of every positional word n-gram.
 
     Same lead-window gram build as `text.winnow_fingerprints` (one
     exchange of narrow (doc, pos, word) rows, codegen end to end; the
     transform/slice form is O(words²) per doc). Docs with fewer than n
     words emit their single truncated gram at pos 0; empty docs emit
-    nothing (callers restore them with a left join).
-
-    ``gram_key``: "md5" (default) keeps the full 32-hex-char key for
-    bit-exact oracle parity; "int64" truncates the md5 to its first 15
-    hex chars (60 bits) parsed into one LONG — the extreme-scale key
-    the module docstring promises. The 60-bit key quarters the bytes
-    the gram-count shuffle and the dup-hash join move per row (8 vs 32+
-    per key) and hash-aggregates native longs instead of strings.
-    Collision safety: truncation can only mark a unique gram as
-    duplicated (false dup), never hide a real dup — at 10^12 distinct
-    grams the expected number of colliding 60-bit pairs is
-    ~(10^24/2)/2^60 ≈ 4x10^5, i.e. ~0.00004% of grams over-marked, far
-    below the n-gram detection threshold's own noise; at the 10^9 scale
-    of a single shard it is ~0.4 expected collisions (none in
-    practice). Spans derived under either key are identical on any
-    collision-free corpus (the equivalence test pins this).
+    nothing (callers restore them with a left join). The key is the
+    full 32-hex-char md5, bit-exact with the oracle.
     """
     w = words(F.col(text_col))
     wl = docs.select(
@@ -1425,32 +1354,19 @@ def _positional_grams(
     gram = F.concat_ws(
         " ", F.col("_w"), *[F.lead("_w", i).over(order) for i in range(1, n)]
     )
-    if gram_key == "md5":
-        h = F.md5(gram)
-    elif gram_key == "int64":
-        # the shared 60-bit md5-prefix hash (15 hex chars always fit a
-        # signed long; 16 would overflow at >= 2^63) — ONE definition
-        # keeps the v60_sql/v60_py oracle twins authoritative
-        h = v60(gram)
-    else:
-        raise ValueError(f"gram_key must be md5|int64, got {gram_key!r}")
     return (
-        wl.withColumn("h", h)
+        wl.withColumn("h", F.md5(gram))
         .filter(F.col("pos") < F.col("_n_g"))
         .select("doc_id", "n_tok", "pos", "h")
     )
 
 
-def dup_span_islands(
-    docs: DataFrame, n: int, text_col: str, gram_key: str = "md5"
-) -> DataFrame:
+def dup_span_islands(docs: DataFrame, n: int, text_col: str) -> DataFrame:
     """(doc_id, n_tok, span_start, span_end) — maximal contiguous runs
-    of duplicated tokens (0-based, end inclusive, clamped to the doc).
-    ``gram_key`` as in `_positional_grams` ("int64" = the flag-gated
-    truncated-key mode for extreme-scale corpora)."""
+    of duplicated tokens (0-based, end inclusive, clamped to the doc)."""
     if n < 1:  # n=0 would mark every corpus-repeated WORD a dup gram
         raise ValueError(f"n must be >= 1, got {n}")
-    grams = _positional_grams(docs, n, text_col, gram_key)
+    grams = _positional_grams(docs, n, text_col)
     # a gram is duplicated iff its hash occurs more than once in the
     # corpus (cross-doc or a repeat within the same doc — the Lee '21
     # rule). groupBy + inner join beats count() OVER (PARTITION BY h):
@@ -1496,7 +1412,6 @@ def dup_gram_spans(
     n: int = 5,
     text_col: str = "text",
     spans: DataFrame | None = None,
-    gram_key: str = "md5",
 ) -> DataFrame:
     """Exact duplicate-substring span statistics per document — the
     k-gram form of suffix-array substring dedup (Lee et al. '21
@@ -1521,11 +1436,7 @@ def dup_gram_spans(
     (reused by the island merge — same partitioning) and the global
     gram-count hash aggregate, which map-side-combines (partial counts
     per task) so the shuffle carries one row per distinct gram per task,
-    not per occurrence. At extreme scale pass ``gram_key="int64"``:
-    the md5 truncates to a 60-bit LONG key, quartering shuffle bytes
-    per gram row (collision-safety argument in `_positional_grams` —
-    birthday collisions can only over-mark, ~4e5 false-dup grams at
-    10^12 grams). The default stays full-width md5 for bit-exact
+    not per occurrence. The key is full-width md5 for bit-exact
     oracle parity.
 
     `spans`: a precomputed `dup_span_islands` table (doc_id, n_tok,
@@ -1536,7 +1447,7 @@ def dup_gram_spans(
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     if spans is None:
-        spans = dup_span_islands(docs, n, text_col, gram_key)
+        spans = dup_span_islands(docs, n, text_col)
     per_doc = spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_dup_spans"),
         F.sum(F.col("span_end") - F.col("span_start") + 1).alias(
@@ -1570,7 +1481,6 @@ def strip_dup_spans(
     n: int = 5,
     text_col: str = "text",
     spans: DataFrame | None = None,
-    gram_key: str = "md5",
 ) -> DataFrame:
     """Rebuild each document with its duplicated spans removed — the
     executable companion of `dup_gram_spans` (what ExactSubstr dedup
@@ -1586,13 +1496,12 @@ def strip_dup_spans(
     itself, so the exchange is the payload, not overhead.
 
     `spans`: optional precomputed `dup_span_islands` table shared with
-    `dup_gram_spans` (same contract as there). ``gram_key`` as in
-    `_positional_grams` ("int64" = truncated-key mode at scale).
+    `dup_gram_spans` (same contract as there).
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
     if spans is None:
-        spans = dup_span_islands(docs, n, text_col, gram_key)
+        spans = dup_span_islands(docs, n, text_col)
     dup_positions = spans.select(
         "doc_id",
         F.explode(F.sequence("span_start", "span_end")).alias("pos"),

@@ -430,7 +430,6 @@ def neighbor_lists(
     score_col: str = "score",
     render_decimals: int = 6,
     pre_truncate: bool = True,
-    salt_buckets: int | None = None,
 ) -> DataFrame:
     """A12/W3/O2: per-item neighbor list, score-desc, top-k, rendered
     'item:score,item:score,...' exactly like the reference's sink format.
@@ -442,81 +441,47 @@ def neighbor_lists(
     pre_truncate=True (the DEFAULT — it is the path that survives 100x
     scale, so it is also the path the oracle checks): rows are cut to
     the top k per item BEFORE any collect_list, and total_candidates
-    comes from a separate count aggregate (map-side partial). The cut is
-    a plain single-window row_number by default; pass salt_buckets
-    (e.g. 16) to switch to the salted two-phase top-K when a hot item's
-    candidate set would serialize one task — on an evenly-keyed pair
-    table the two extra shuffles the salted form costs are pure overhead
-    (round-2 bench: it tripled the group's wall time), so skew handling
-    is an explicit escape hatch, not the default. Both cuts are
-    equivalence-tested. pre_truncate=False collect_lists ALL candidates
-    of an item into one task before slicing — kept only as the simple
-    form for small inputs. Output is identical in all three paths.
+    rides the same window pass as the cut: a plain single-window
+    row_number (the salted two-phase top-K of round 2 tripled the
+    group's wall time on an evenly-keyed pair table; a hot-key cut
+    lives in `setops.top_k_per_group_salted`). pre_truncate=False
+    collect_lists ALL candidates of an item into one task before
+    slicing — kept only as the simple form for small inputs and as the
+    reference the pre-truncated path is equivalence-tested against.
+    Output is identical in both paths.
     """
     if pre_truncate:
         from pyspark.sql import Window
-
-        from flink_project_spark.operators.setops import (
-            top_k_per_group_salted,
-        )
 
         entry = F.struct(
             (-F.col(score_col)).alias("neg_score"),
             F.col("item_b").alias("nb"),
         )
         neg = scored.withColumn("_neg", -F.col(score_col))
-        if salt_buckets:
-            # the salted escape hatch keeps the separate totals
-            # aggregate + join: its two-phase cut has no single
-            # whole-group window pass the count could ride on
-            totals = scored.groupBy("item_a").agg(
-                F.count(F.lit(1)).alias("_total")
+        # Round 8 (guide §2.4): total_candidates rides the SAME window
+        # pass as the top-K row_number — a whole-partition count over
+        # the item_a partitioning the rank window already establishes
+        # (one Exchange + Sort, two Window ops) — instead of a separate
+        # groupBy aggregate over the scored table plus a join back.
+        # Identical value: the count over the unbounded frame is
+        # exactly count(*) GROUP BY item_a.
+        if "rn" in neg.columns or "_total" in neg.columns:
+            raise ValueError(
+                "input columns collide with the operator's working "
+                "'rn'/'_total' columns; rename them first"
             )
-            cut = top_k_per_group_salted(
-                neg,
-                ["item_a"],
-                ["_neg", "item_b"],
-                k,
-                ascending=True,
-                salt_buckets=salt_buckets,
-            ).drop("_neg")
-            lists = (
-                cut.groupBy("item_a")
-                .agg(
-                    F.sort_array(F.collect_list(entry), asc=True).alias(
-                        "entries"
-                    )
-                )
-                .join(totals, "item_a")
-            )
-        else:
-            # Round 8 (guide §2.4): total_candidates rides the SAME
-            # window pass as the top-K row_number — a whole-partition
-            # count over the item_a partitioning the rank window
-            # already establishes (one Exchange + Sort, two Window
-            # ops) — instead of a separate groupBy aggregate over the
-            # scored table plus a join back. Identical value: the
-            # count over the unbounded frame is exactly
-            # count(*) GROUP BY item_a.
-            if "rn" in neg.columns or "_total" in neg.columns:
-                raise ValueError(
-                    "input columns collide with the operator's working "
-                    "'rn'/'_total' columns; rename them first"
-                )
-            wr = Window.partitionBy("item_a").orderBy("_neg", "item_b")
-            wt = Window.partitionBy("item_a")
-            cut = (
-                neg.withColumn("rn", F.row_number().over(wr))
-                .withColumn("_total", F.count(F.lit(1)).over(wt))
-                .filter(F.col("rn") <= k)
-                .drop("rn", "_neg")
-            )
-            lists = cut.groupBy("item_a").agg(
-                F.sort_array(F.collect_list(entry), asc=True).alias(
-                    "entries"
-                ),
-                F.first("_total").alias("_total"),
-            )
+        wr = Window.partitionBy("item_a").orderBy("_neg", "item_b")
+        wt = Window.partitionBy("item_a")
+        cut = (
+            neg.withColumn("rn", F.row_number().over(wr))
+            .withColumn("_total", F.count(F.lit(1)).over(wt))
+            .filter(F.col("rn") <= k)
+            .drop("rn", "_neg")
+        )
+        lists = cut.groupBy("item_a").agg(
+            F.sort_array(F.collect_list(entry), asc=True).alias("entries"),
+            F.first("_total").alias("_total"),
+        )
         topk = F.col("entries")
         rendered = F.array_join(
             F.transform(

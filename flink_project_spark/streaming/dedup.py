@@ -97,20 +97,19 @@ def _is_remote_store(u: str) -> bool:
 
 
 def _norm_store_path(u: str) -> str:
-    """Normalize one store-path spelling to a bare absolute POSIX path
-    for prefix-relating a store listing against the caller's
-    ``store_dir`` spelling.
+    """Normalize one store-path spelling to a bare absolute POSIX path —
+    the driver-local directory that the local-filesystem store ops
+    (`_next_store_batch_id`, `_check_store_meta`, `compact_store`)
+    touch with ``os`` calls, so every spelling Spark accepts for a
+    store ('file:/x', 'file:///x', 'file:store', relative) names the
+    same directory there.
 
     URI-aware: keeps only the PATH component. The authority
-    (hdfs://nn:8020/store, s3a://bucket/store) must NOT be folded into
-    the path — the engine's canonical listing may spell it differently
-    (default port added or elided) and a substring strip would cwd-join
-    'nn:8020/store' as a relative path, making every relpath start with
-    '..'. Comparing paths alone is sound at the call site because the
-    listing is already scoped: load(store_dir) returns only objects
-    under the store, whatever its authority spelling. Only a genuinely
-    scheme-less relative path (or a scheme-relative spelling of a known
-    filesystem scheme) is cwd-joined."""
+    (file://localhost/store, hdfs://nn:8020/store) must NOT be folded
+    into the path — a substring strip would cwd-join 'nn:8020/store'
+    as a relative path. Only a genuinely scheme-less relative path (or
+    a scheme-relative spelling of a known filesystem scheme) is
+    cwd-joined."""
     import os
     import posixpath
     from urllib.parse import urlsplit
@@ -135,88 +134,74 @@ def _norm_store_path(u: str) -> str:
     return posixpath.normpath(path)
 
 
-def _list_store_layouts(
-    spark, store_dir: str
-) -> tuple[bool, list[str]]:
-    """Classify the signature store's on-disk layouts: returns
-    ``(has_batch_dirs, root_parquet_files)`` for a store that may mix
-    ``batch=N`` partitions (current format) with flat root-level
-    parquet files (pre-r3 legacy).
+def _store_partitions(
+    spark, store_dir: str, exclude: int | None = None
+) -> dict[int, str] | None:
+    """The signature store's ``batch=N`` partitions as ``{N: path}`` in
+    batch order, minus ``exclude`` (the caller's own batch: a
+    foreachBatch replay overwrites that partition and must never match
+    its own half-written prior attempt); None for a missing store or
+    one with no other partition.
 
-    Fast path: the Hadoop FileSystem API via py4j — works for any
-    scheme (local, HDFS, s3a) under a classic session. Under Spark
-    Connect the py4j internals (``spark._jvm`` / ``spark._jsc``) don't
-    exist, so the fallback lists file PATHS through the `binaryFile`
-    data source (path-only projection — file contents are pruned, the
-    job is a listing): same result, any scheme, Connect-safe. A
-    missing store dir returns empty on both paths; any OTHER read
-    failure raises — never silently admit a batch against an unread
-    store."""
-    try:
-        jvm = spark._jvm
-        jsc = spark._jsc
-        if jvm is None or jsc is None:  # pragma: no cover — Connect
-            raise AttributeError("classic py4j gateway unavailable")
-        jpath = jvm.org.apache.hadoop.fs.Path(store_dir)
-        fs = jpath.getFileSystem(jsc.hadoopConfiguration())  # noqa: SLF001
-        if not fs.exists(jpath):
-            return False, []
-        root_files, has_batch_dirs = [], False
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if st.isFile() and name.endswith(".parquet"):
-                root_files.append(st.getPath().toString())
-            elif st.isDirectory() and name.startswith("batch="):
-                has_batch_dirs = True
-        return has_batch_dirs, root_files
-    except AttributeError:
-        # Spark Connect: no py4j gateway. binaryFile lists paths
-        # engine-side; selecting only `path` prunes the content column.
-        from pyspark.sql.utils import AnalysisException
+    The one store read of every store entry point: ONE ``listStatus``
+    through the Hadoop FileSystem API, so any scheme Spark reads
+    (local, HDFS, s3a) lists the same way. `_admit_and_store` writes
+    only ``batch=<id>`` partitions, so a root-level ``*.parquet`` file
+    belongs to no layout this engine reads: it raises ``ValueError``
+    naming the file(s) instead of being matched, skipped or deleted —
+    and before the caller writes anything. Hidden entries (the
+    ``_fps_store_meta.json`` sidecar, ``.compact-batch=N`` leftovers)
+    are not partitions."""
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(store_dir)
+    fs = jpath.getFileSystem(sc._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return None
+    parts, stray = {}, []
+    for st in fs.listStatus(jpath):
+        name = st.getPath().getName()
+        if st.isDirectory() and name.startswith("batch="):
+            parts[int(name.split("=", 1)[1])] = st.getPath().toString()
+        elif st.isFile() and name.endswith(".parquet"):
+            stray.append(st.getPath().toString())
+    if stray:
+        raise ValueError(
+            f"signature store {store_dir!r} holds root-level parquet "
+            f"file(s) {sorted(stray)}: a store is one batch=<id> "
+            "partition per micro-batch, and a flat file would be "
+            "neither matched nor compacted; move it out of the store"
+        )
+    parts.pop(exclude, None)
+    return dict(sorted(parts.items())) or None
 
-        try:
-            paths = [
-                r.path
-                for r in spark.read.format("binaryFile")
-                .option("recursiveFileLookup", "true")
-                .option("pathGlobFilter", "*.parquet")
-                .load(store_dir)
-                .select("path")
-                .collect()
-            ]
-        except AnalysisException as e:
-            msg = str(e)
-            if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-                return False, []
-            raise
-        # Classify by the path RELATIVE to the store dir, normalizing
-        # scheme spelling first via `_norm_store_path`: the engine
-        # reports URIs in Hadoop's canonical form
-        # ('file:/data/store/...'), which need not contain the caller's
-        # spelling ('file:///data/store', a relative path, ...) as a
-        # substring — a raw prefix match would classify nothing and
-        # silently admit the batch against a populated store.
-        import posixpath
 
-        base = _norm_store_path(store_dir)
-        root_files, has_batch_dirs = [], False
-        for p in paths:
-            np = _norm_store_path(p)
-            rel = posixpath.relpath(np, base)
-            if rel.startswith(".."):
-                # load(store_dir) only returns paths under the store —
-                # an unrelatable path means the normalization above is
-                # wrong for this filesystem; raise rather than silently
-                # misclassify (= admit dups against an unread store)
-                raise ValueError(
-                    f"store path {p!r} does not resolve under "
-                    f"{store_dir!r} (normalized {np!r} vs {base!r})"
-                )
-            if rel.startswith("batch="):
-                has_batch_dirs = True
-            elif "/" not in rel:
-                root_files.append(p)
-        return has_batch_dirs, root_files
+def _store_and_cutoff(
+    batch: DataFrame,
+    store_dir: str,
+    batch_id: int,
+    ts_col: str,
+    horizon_seconds: int,
+):
+    """Store-read prologue shared by both streaming dedup twins:
+    ``(store, cutoff, null_ts_docs)`` — every OTHER batch's stored
+    arrivals as one DataFrame (`_store_partitions`), the batch's
+    conservative store pre-filter cutoff, and its null-ts row count;
+    ``(None, None, 0)`` when there is no store to match.
+
+    The cutoff only bounds matching volume, not semantics: derived
+    from the batch MINIMUM real ts, no stored arrival older than it
+    can be inside any real-ts batch row's per-document horizon (the
+    exact per-row horizon is each twin's match filter). It is None
+    when every row of the batch has a null ts."""
+    spark = batch.sparkSession
+    parts = _store_partitions(spark, store_dir, exclude=batch_id)
+    if parts is None:
+        return None, None, 0
+    cutoff, null_ts_docs = batch.agg(
+        F.min(F.col(ts_col)) - F.expr(f"INTERVAL {horizon_seconds} SECONDS"),
+        F.count_if(F.col(ts_col).isNull()),
+    ).collect()[0]
+    return spark.read.parquet(*parts.values()), cutoff, null_ts_docs
 
 
 def _next_store_batch_id(store_dir: str) -> int:
@@ -250,8 +235,8 @@ def _next_store_batch_id(store_dir: str) -> int:
 
 #: sidecar recording the signature store's SIGNATURE-SPACE contract.
 #: Leading underscore keeps it invisible to Spark's file listing (same
-#: convention as _SUCCESS), to `_list_store_layouts` (*.parquet glob),
-#: and to `compact_store`/`_next_store_batch_id` (batch= prefix).
+#: convention as _SUCCESS), and its name to `_store_partitions`
+#: (batch= prefix, *.parquet check) and `_next_store_batch_id`.
 _STORE_META_FILE = "_fps_store_meta.json"
 
 
@@ -315,12 +300,12 @@ def compact_store(
     watermark=None,
 ) -> dict:
     """Offline maintenance for a streaming-dedup signature store:
-    delete every ``batch=N`` partition and legacy root-level file whose
-    arrivals are ALL past the horizon, and REWRITE partitions that are
-    only partially expired with just their in-horizon rows — so the
-    store's size is bounded by the horizon instead of growing with
-    stream lifetime (T13; the cluster analog is a partition DROP plus
-    one rewrite of the boundary partition).
+    delete every ``batch=N`` partition whose arrivals are ALL past the
+    horizon, and REWRITE partitions that are only partially expired
+    with just their in-horizon rows — so the store's size is bounded by
+    the horizon instead of growing with stream lifetime (T13; the
+    cluster analog is a partition DROP plus one rewrite of the boundary
+    partition).
 
     Correctness contract (matches the operators' own admission rules):
     a stored arrival at ts can only drop a real-ts NEW document with
@@ -352,10 +337,8 @@ def compact_store(
 
     Works on any store whose rows carry ``_ts`` — both the SimHash
     twin's (doc_id, simhash, _ts) and the semantic twin's quantized
-    rows — and on mixed modern+legacy layouts (legacy root files are
-    delete-only: their rows all predate the batch layout, so a
-    partially-expired legacy file just waits for full expiry, exactly
-    the "delete once past horizon" note this function automates).
+    rows. A root-level parquet file raises (`_store_partitions`)
+    before anything is deleted or rewritten.
     """
     import os
     import shutil
@@ -363,7 +346,6 @@ def compact_store(
     stats = {
         "batches_deleted": 0,
         "batches_rewritten": 0,
-        "legacy_files_deleted": 0,
         "rows_kept": 0,
         "rows_dropped": 0,
     }
@@ -380,15 +362,11 @@ def compact_store(
             "table's own partition-DROP maintenance pipeline"
         )
     local_store = _norm_store_path(store_dir)
-    has_batch_dirs, root_files = _list_store_layouts(spark, store_dir)
-    if not has_batch_dirs and not root_files:
+    parts = _store_partitions(spark, store_dir)
+    if parts is None:
         return stats
-    batch_ids = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(local_store)
-        if d.startswith("batch=")
-    )
-    protected = batch_ids[-1] if batch_ids else None
+    batch_ids = list(parts)
+    protected = batch_ids[-1]
     if watermark is None:
         # The default watermark EXCLUDES the protected (highest)
         # partition's rows. That partition is the one a foreachBatch
@@ -404,28 +382,16 @@ def compact_store(
         # has ts >= committed_max, so eviction stays invisible even to
         # the replay (out-of-order arrivals remain the documented
         # over-admit-only exception).
-        committed = [
-            os.path.join(local_store, f"batch={b}")
-            for b in batch_ids
-            if b != protected
-        ]
-        frames = []
-        if committed:
-            # ONE multi-path reader for all committed partitions — a
-            # per-partition read would pay K listings plus a K-deep
-            # union just to take a scalar max
-            frames.append(spark.read.parquet(*committed).select("_ts"))
-        if root_files:
-            frames.append(spark.read.parquet(*root_files).select("_ts"))
-        if not frames:  # a single-partition store: nothing compactable
-            stats["rows_kept"] += spark.read.parquet(
-                os.path.join(local_store, f"batch={protected}")
-            ).count()
+        committed = [parts[b] for b in batch_ids[:-1]]
+        if not committed:  # a single-partition store: nothing compactable
+            stats["rows_kept"] += spark.read.parquet(parts[protected]).count()
             return stats
-        all_ts = frames[0]
-        for f in frames[1:]:
-            all_ts = all_ts.union(f)
-        watermark = all_ts.agg(F.max("_ts")).collect()[0][0]
+        # ONE multi-path reader for all committed partitions — a
+        # per-partition read would pay K listings plus a K-deep union
+        # just to take a scalar max
+        watermark = (
+            spark.read.parquet(*committed).agg(F.max("_ts")).collect()[0][0]
+        )
     if watermark is None:  # store exists but holds zero rows
         return stats
     cutoff = F.lit(watermark) - F.expr(
@@ -452,8 +418,8 @@ def compact_store(
             stats["batches_deleted"] += 1
             stats["rows_dropped"] += n_total
         elif n_kept < n_total:
-            # rewrite via DOT-prefixed siblings (hidden from Spark's
-            # partition discovery), then a rename-aside swap: the only
+            # rewrite via DOT-prefixed siblings (not partitions to
+            # `_store_partitions`), then a rename-aside swap: the only
             # crash window that leaves batch=N absent is between the
             # two renames (metadata ops), and a crash there leaves the
             # kept rows in .compact-batch=N and the originals in
@@ -473,23 +439,6 @@ def compact_store(
             stats["rows_kept"] += n_kept
             stats["rows_dropped"] += n_total - n_kept
         else:
-            stats["rows_kept"] += n_total
-    for rf in root_files:
-        # engine-reported canonical path ('file:/data/...') -> bare
-        # local path for os.remove, via the module's one normalizer
-        local = _norm_store_path(rf)
-        rows = spark.read.parquet(rf)
-        n_total, n_kept = rows.agg(
-            F.count(F.lit(1)),
-            F.count(F.when(F.col("_ts") >= cutoff, F.lit(1))),
-        ).collect()[0]
-        if n_kept == 0:
-            os.remove(local)
-            stats["legacy_files_deleted"] += 1
-            stats["rows_dropped"] += n_total
-        else:
-            # legacy files are delete-only (see docstring): a
-            # partially-expired one stays whole until full expiry
             stats["rows_kept"] += n_total
     return stats
 
@@ -635,10 +584,12 @@ def near_dup_dedup_batch(
         return batch.limit(0)
     if batch_id is None:
         batch_id = _next_store_batch_id(store_dir)
+    store, cutoff, null_ts_docs = _store_and_cutoff(
+        batch, store_dir, batch_id, ts_col, horizon_seconds
+    )
     _check_store_meta(
         store_dir, {"kind": "simhash", "bits": bits, "shingle": shingle}
     )
-    spark = batch.sparkSession
     sim = persist_tracked(
         doc_simhash(
             batch.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
@@ -654,52 +605,17 @@ def near_dup_dedup_batch(
         label=f"neardup_sim_b{batch_id}",
     )
     try:
-        # The store can hold TWO layouts at once: batch=N partitions
-        # (current format) and flat root-level (simhash, _ts) files
-        # from a pre-r3 store. Spark's partition discovery over a mixed
-        # directory silently resolves to the partitioned files ONLY —
-        # the first post-upgrade batch write would make every legacy
-        # signature vanish from matching with no error — so the two
-        # layouts are read explicitly and matched separately. Listing
-        # is delegated to `_list_store_layouts` (Hadoop FS API under a
-        # classic session, Connect-safe binaryFile path listing
-        # otherwise); store EXISTENCE is checked explicitly instead of
-        # swallowing AnalysisException, so a real read failure (schema
-        # corruption, permissions) raises instead of silently admitting
-        # the whole batch. The dual read lasts only as long as the flat
-        # files exist: once every legacy arrival is past the horizon,
-        # operators should delete the root-level files (they can no
-        # longer match) and the store is single-layout again.
-        has_batch_dirs, root_files = _list_store_layouts(spark, store_dir)
-        modern = legacy_rows = None
-        if has_batch_dirs:
-            modern = spark.read.parquet(store_dir)
-        if root_files:
-            legacy_rows = spark.read.parquet(*root_files)
-        cutoff = None
-        null_ts_docs = 0
-        if modern is not None or legacy_rows is not None:
-            # cutoff is ONLY a conservative store pre-filter (matching
-            # volume, not semantics): derived from the batch MINIMUM
-            # real ts, no stored arrival older than it can be inside
-            # any real-ts batch row's per-document horizon. The exact
-            # per-row horizon is enforced in _match_side's filter.
-            cutoff, null_ts_docs = batch.agg(
-                F.min(F.col(ts_col))
-                - F.expr(f"INTERVAL {horizon_seconds} SECONDS"),
-                F.count_if(F.col(ts_col).isNull()),
-            ).collect()[0]
         # Null-ts new docs lose to ANY stored real-ts arrival — no
         # horizon applies to them (null orders last), so their matching
         # must run against the UNFILTERED store; otherwise admission of
         # a null-ts doc would depend on the pre-filter its batchmates
         # happen to set (batch-composition dependence). They match in a
-        # dedicated pass against the pre-cutoff frames (skipped when
+        # dedicated pass against the unfiltered store (skipped when
         # the batch has no null-ts docs); when cutoff is None the whole
         # batch is null-ts and the main pass is already unfiltered.
         sim_null = sim.filter(F.col("_ts").isNull())
 
-        def _match_side(ref, tie_rule):
+        def _match_side(ref):
             """doc_ids of new docs losing to a stored arrival in `ref`
             ((doc_id, simhash, _ts) rows): drop the new doc only if the
             stored one is (ts, id)-earlier AND within the new doc's
@@ -729,7 +645,10 @@ def near_dup_dedup_batch(
                 .filter(
                     F.col("ts_new").isNull()  # null ts orders last
                     | (F.col("ts_ref") < F.col("ts_new"))
-                    | ((F.col("ts_ref") == F.col("ts_new")) & tie_rule)
+                    | (
+                        (F.col("ts_ref") == F.col("ts_new"))
+                        & (F.col("ref_doc_id") < F.col("doc_id"))
+                    )
                 )
                 .filter(
                     _within_horizon(
@@ -752,49 +671,14 @@ def near_dup_dedup_batch(
                 blocks=blocks,
             )
 
-        hit_parts = []
-        if modern is not None:
-            # replay safety: never match this batch's own (failed,
-            # half-written) prior attempt
-            if "batch" in modern.columns:
-                modern = modern.filter(F.col("batch") != F.lit(batch_id))
-            m = modern
-            if cutoff is not None:
-                m = m.filter(F.col("_ts") >= F.lit(cutoff))
-            hit_parts.append(
-                _match_side(m, F.col("ref_doc_id") < F.col("doc_id"))
-            )
-            if cutoff is not None and null_ts_docs:
-                hit_parts.append(_match_null_new(modern))
-        if legacy_rows is not None:
-            # legacy rows carry no doc_id: synthesize the signature
-            # VALUE as the identity so the banded match and ts
-            # join-back still work. EVERY legacy arrival row is kept
-            # (no per-signature min reduction): under the per-document
-            # horizon an aged-out older arrival must not hide an
-            # in-horizon re-arrival of the same signature — the
-            # join-back fans out to each arrival and the horizon
-            # filter picks the qualifying ones. Ties resolve in the
-            # store's favor (the row arrived in an earlier batch; no
-            # id tie-break exists across id spaces), and legacy
-            # matching is a separate pass so a synthesized id can
-            # never collide with a real modern doc_id in the join-back.
-            lr = legacy_rows
-            if cutoff is not None:
-                lr = lr.filter(F.col("_ts") >= F.lit(cutoff))
-            lr = lr.withColumn("doc_id", F.col("simhash"))
-            hit_parts.append(_match_side(lr, F.lit(True)))
-            if cutoff is not None and null_ts_docs:
-                hit_parts.append(
-                    _match_null_new(
-                        legacy_rows.withColumn("doc_id", F.col("simhash"))
-                    )
-                )
         store_hits = None
-        if hit_parts:
-            store_hits = hit_parts[0]
-            for p in hit_parts[1:]:
-                store_hits = store_hits.union(p)
+        if store is not None:
+            ref = store
+            if cutoff is not None:
+                ref = ref.filter(F.col("_ts") >= F.lit(cutoff))
+            store_hits = _match_side(ref)
+            if cutoff is not None and null_ts_docs:
+                store_hits = store_hits.union(_match_null_new(store))
             store_hits = store_hits.distinct()
         # in-batch: orient near-dup pairs by arrival order (ts, then
         # id) — the later side of any pair within the per-document
@@ -1004,8 +888,6 @@ def semantic_dedup_batch(
     in-horizon arrival — one ``batch=<id>`` OVERWRITE partition per
     micro-batch (replay-idempotent, same layout/contract as the SimHash
     store); matching is always a bucket equi-join, never batch x store.
-    Unlike the SimHash store there is no legacy flat layout to honor —
-    the store is single-layout by construction.
 
     ``n_planes`` is part of the STORE's contract, not a per-batch
     tuning knob: stored buckets were computed under one plane set, and
@@ -1041,10 +923,12 @@ def semantic_dedup_batch(
         return batch.limit(0)
     if batch_id is None:
         batch_id = _next_store_batch_id(store_dir)
+    store, cutoff, null_ts_docs = _store_and_cutoff(
+        batch, store_dir, batch_id, ts_col, horizon_seconds
+    )
     _check_store_meta(
         store_dir, {"kind": "semantic", "dim": dim, "n_planes": n_planes}
     )
-    spark = batch.sparkSession
     sim = persist_tracked(
         with_quantized(
             batch.select(
@@ -1063,27 +947,6 @@ def semantic_dedup_batch(
         label=f"semdedup_sim_b{batch_id}",
     )
     try:
-        has_batch_dirs, _ = _list_store_layouts(spark, store_dir)
-        store = None
-        cutoff = None
-        if has_batch_dirs:
-            store = spark.read.parquet(store_dir)
-            if "batch" in store.columns:
-                # replay safety: never match this batch's own (failed,
-                # half-written) prior attempt
-                store = store.filter(F.col("batch") != F.lit(batch_id))
-            # conservative store PRE-FILTER only (the exact horizon is
-            # per-document, enforced in the match filter below): no
-            # stored arrival older than the batch-minimum real ts minus
-            # the horizon can qualify for any real-ts row, and null-ts
-            # rows are horizon-exempt (handled by the isNull branch of
-            # the match filter, which must therefore see the store
-            # UNFILTERED — so the pre-filter keys on ts_new being real)
-            cutoff, null_ts_docs = batch.agg(
-                F.min(F.col(ts_col))
-                - F.expr(f"INTERVAL {horizon_seconds} SECONDS"),
-                F.count_if(F.col(ts_col).isNull()),
-            ).collect()[0]
         new_side = sim.select(
             "doc_id",
             F.col("q").alias("qn"),

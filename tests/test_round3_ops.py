@@ -369,71 +369,6 @@ def test_streaming_near_dup_all_null_ts_batch_still_matches_store(
     assert {r["doc_id"] for r in b2.collect()} == {3}
 
 
-def test_streaming_near_dup_legacy_idless_store(spark, tmp_path):
-    """A pre-r3 signature store (flat (simhash, _ts) files, no doc_id
-    or batch column) is still matched — ties resolve in the store's
-    favor — instead of failing with a missing-column error; and the
-    legacy rows SURVIVE the upgrade: once a post-upgrade batch has
-    written its batch=N partition next to the flat files, partition
-    discovery alone would silently drop the root-level files, so a
-    later batch must still match them (the mixed-layout read)."""
-    from flink_project_spark.llm.dedup import doc_simhash
-    from flink_project_spark.streaming.dedup import near_dup_dedup_batch
-
-    store = str(tmp_path / "store")
-    legacy_text = " ".join(f"t{i}" for i in range(25))
-    seed = spark.createDataFrame(
-        [(99, legacy_text)], "doc_id long, text string"
-    )
-    # legacy layout: flat append of (simhash, _ts) only
-    doc_simhash(seed, text_col="text", bits=32).select(
-        "simhash",
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("_ts"),
-    ).write.mode("overwrite").parquet(store)
-
-    def mk(rows):
-        return spark.createDataFrame(
-            rows, "doc_id long, ts_s string, text string"
-        ).select(
-            "doc_id", F.col("ts_s").cast("timestamp").alias("ts"), "text"
-        )
-
-    # batch 1: an exact dup of the legacy text is dropped (pure-legacy
-    # read path), a fresh doc is admitted
-    got = near_dup_dedup_batch(
-        mk([(2, "2024-01-01 00:05:00", legacy_text),
-            (3, "2024-01-01 00:05:00", "completely different words here")]),
-        store,
-        horizon_seconds=600,
-    )
-    assert {r["doc_id"] for r in got.collect()} == {3}
-
-    # batch 2 on a SECOND store seeded the same way, whose first batch
-    # carries ONLY fresh docs: the store becomes MIXED (flat legacy
-    # files + a batch=N partition) with the legacy text present ONLY in
-    # the root files — so batch 2's drop can come from nothing but the
-    # legacy-file read (a batch-1 dup would mask a broken mixed-layout
-    # read behind the modern row it records)
-    store2 = str(tmp_path / "store2")
-    doc_simhash(seed, text_col="text", bits=32).select(
-        "simhash",
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("_ts"),
-    ).write.mode("overwrite").parquet(store2)
-    got_b1 = near_dup_dedup_batch(
-        mk([(3, "2024-01-01 00:05:00", "completely different words here")]),
-        store2,
-        horizon_seconds=600,
-    )
-    assert {r["doc_id"] for r in got_b1.collect()} == {3}
-    got_b2 = near_dup_dedup_batch(
-        mk([(4, "2024-01-01 00:07:00", legacy_text),
-            (5, "2024-01-01 00:07:00", "yet another unrelated document")]),
-        store2,
-        horizon_seconds=600,
-    )
-    assert {r["doc_id"] for r in got_b2.collect()} == {5}
-
-
 def test_streaming_near_dup_null_ts_batchmate_independence(spark, tmp_path):
     """A null-ts doc loses to ANY stored real-ts arrival regardless of
     horizon — including when a real-ts batchmate sets a cutoff that
@@ -475,34 +410,6 @@ def test_streaming_near_dup_null_ts_batchmate_independence(spark, tmp_path):
         horizon_seconds=600,
     )
     assert {r["doc_id"] for r in mixed.collect()} == {3}
-
-
-def test_streaming_near_dup_legacy_in_horizon_rearrival(spark, tmp_path):
-    """A legacy signature that arrived BOTH long ago and recently must
-    match on its recent in-horizon arrival: the horizon filter applies
-    per-arrival, before the per-signature min — an aged-out first
-    arrival must not hide the re-arrival."""
-    from flink_project_spark.llm.dedup import doc_simhash
-    from flink_project_spark.streaming.dedup import near_dup_dedup_batch
-
-    store = str(tmp_path / "store")
-    text = " ".join(f"t{i}" for i in range(25))
-    sig = doc_simhash(
-        spark.createDataFrame([(99, text)], "doc_id long, text string"),
-        text_col="text",
-        bits=32,
-    ).select("simhash")
-    for ts in ("2024-01-01 00:00:00", "2024-01-01 09:55:00"):
-        sig.select(
-            "simhash", F.lit(ts).cast("timestamp").alias("_ts")
-        ).write.mode("append").parquet(store)
-
-    batch = spark.createDataFrame(
-        [(7, "2024-01-01 10:00:00", text)],
-        "doc_id long, ts_s string, text string",
-    ).select("doc_id", F.col("ts_s").cast("timestamp").alias("ts"), "text")
-    got = near_dup_dedup_batch(batch, store, horizon_seconds=600)
-    assert got.count() == 0  # the 09:55 arrival is within the horizon
 
 
 def test_streaming_near_dup_per_document_horizon(spark, tmp_path):
@@ -1399,47 +1306,76 @@ def test_compact_store_rewrites_boundary_partition(spark, tmp_path):
     assert os.path.isdir(f"{store}/batch=1")
 
 
-def test_compact_store_deletes_expired_legacy_root_files(spark, tmp_path):
-    """Pre-r3 root-level signature files are deleted once every row is
-    past the horizon (delete-only: a partially-expired legacy file
-    stays whole), automating the documented manual cleanup."""
+def test_store_ops_reject_root_level_parquet_file(spark, tmp_path):
+    """A store is one batch=<id> partition per micro-batch; a
+    root-level *.parquet file belongs to no layout the engine reads.
+    Both streaming twins and compact_store raise ValueError naming the
+    file before writing anything: no new batch=N partition, and every
+    file already in the store keeps its bytes (compact_store, given a
+    watermark past every row, would otherwise delete batch=0)."""
+    import datetime as dt
     import glob
     import os
     import shutil
 
-    from flink_project_spark.streaming.dedup import compact_store
+    from flink_project_spark.streaming.dedup import (
+        compact_store,
+        near_dup_dedup_batch,
+        semantic_dedup_batch,
+    )
 
-    store = tmp_path / "s"
-    store.mkdir()
-    legacy = spark.createDataFrame(
-        [(100, "2024-01-01 00:00:00")], "simhash long, ts_s string"
-    ).select("simhash", F.col("ts_s").cast("timestamp").alias("_ts"))
-    tmp_out = str(tmp_path / "legacy_out")
-    legacy.coalesce(1).write.parquet(tmp_out)
-    part = glob.glob(f"{tmp_out}/part-*.parquet")[0]
-    shutil.copy(part, str(store / "sig-legacy.parquet"))
-    modern = spark.createDataFrame(
-        [(1, 300, "2024-01-01 02:00:00")],
-        "doc_id long, simhash long, ts_s string",
+    docs = spark.createDataFrame(
+        [
+            (i, f"2024-01-01 00:0{i}:00", f"d{i} " * 12, [1.0, float(i)])
+            for i in range(3)
+        ],
+        "doc_id long, ts_s string, text string, embedding array<double>",
     ).select(
-        "doc_id", "simhash", F.col("ts_s").cast("timestamp").alias("_ts")
+        "doc_id",
+        F.col("ts_s").cast("timestamp").alias("ts"),
+        "text",
+        "embedding",
     )
-    modern.write.parquet(f"{store}/batch=0")
+    runs = {
+        "simhash": lambda i, store: near_dup_dedup_batch(
+            docs.filter(F.col("doc_id") == i).drop("embedding"),
+            store,
+            batch_id=i,
+        ),
+        "semantic": lambda i, store: semantic_dedup_batch(
+            docs.filter(F.col("doc_id") == i).drop("text"),
+            store,
+            dim=2,
+            batch_id=i,
+        ),
+    }
 
-    # the default watermark excludes batch=0 (newest partition), so
-    # only the legacy file's own 00:00 row feeds it -> nothing expires;
-    # the operator's explicit committed-through watermark evicts
-    import datetime as dt
+    def snapshot(store):
+        out = {}
+        for d, _, files in os.walk(store):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(d, f), store)] = fh.read()
+        return out
 
-    stats = compact_store(spark, str(store), horizon_seconds=600)
-    assert stats["legacy_files_deleted"] == 0
-    stats = compact_store(
-        spark, str(store), horizon_seconds=600,
-        watermark=dt.datetime(2024, 1, 1, 2, 0, 0),
-    )
-    assert stats["legacy_files_deleted"] == 1
-    assert not os.path.exists(str(store / "sig-legacy.parquet"))
-    assert os.path.isdir(f"{store}/batch=0")  # latest, protected
+    for kind, run in runs.items():
+        store = str(tmp_path / kind)
+        for i in (0, 1):
+            run(i, store).collect()
+        shutil.copy(
+            glob.glob(f"{store}/batch=0/*.parquet")[0],
+            os.path.join(store, "stray.parquet"),
+        )
+        before = snapshot(store)
+        with pytest.raises(ValueError, match="stray.parquet"):
+            run(2, store)
+        with pytest.raises(ValueError, match="stray.parquet"):
+            compact_store(
+                spark, store, horizon_seconds=600,
+                watermark=dt.datetime(2030, 1, 1),
+            )
+        assert snapshot(store) == before, kind
+        assert not os.path.exists(os.path.join(store, "batch=2"))
 
 
 def test_streaming_near_dup_scale_config_matches_twin_and_slicing(
@@ -1624,15 +1560,16 @@ def test_compact_every_bounds_store_inside_foreach_loop(spark, tmp_path):
 
 
 def test_norm_store_path_spellings(monkeypatch):
-    """The Connect-branch store listing relates every reported path to
-    the caller's store_dir spelling via `_norm_store_path`. Pin the
-    normalization contract for each spelling class: Hadoop-canonical
-    ('file:/x'), triple-slash, authority URIs (authority dropped —
-    paths alone are compared because load(store_dir) already scopes the
-    listing), plain absolute/relative paths, colon-containing POSIX
-    relative paths (NOT URIs), and scheme-relative spellings of known
-    filesystem schemes ('file:store' resolves like the engine does:
-    against the cwd)."""
+    """The local-filesystem store ops (`_next_store_batch_id`,
+    `_check_store_meta`, `compact_store`) resolve every store_dir
+    spelling to one driver-local directory via `_norm_store_path`. Pin
+    the normalization contract for each spelling class:
+    Hadoop-canonical ('file:/x'), triple-slash, authority URIs
+    (authority dropped — only the path component is kept), plain
+    absolute/relative paths, colon-containing POSIX relative paths
+    (NOT URIs), and scheme-relative spellings of known filesystem
+    schemes ('file:store' resolves like the engine does: against the
+    cwd)."""
     import os
 
     from flink_project_spark.streaming.dedup import _norm_store_path

@@ -951,48 +951,6 @@ def test_windowed_uv_exact_ignores_null_users(spark, tmp_path):
     assert got[False] == {("k", 1)}
 
 
-def test_store_layout_listing_connect_fallback(spark, tmp_path):
-    """`_list_store_layouts`'s Connect-safe fallback (binaryFile path
-    listing — used when the py4j gateway is absent) classifies a
-    mixed-layout store identically to the Hadoop-FS fast path, and
-    both report a missing store as empty rather than raising."""
-    from flink_project_spark.streaming.dedup import _list_store_layouts
-
-    store = tmp_path / "sigstore"
-    # legacy flat root-level file + modern batch=N partition
-    spark.range(3).selectExpr(
-        "id as simhash", "timestamp('2024-01-01') as _ts"
-    ).coalesce(1).write.mode("overwrite").parquet(str(store / "_tmp"))
-    import shutil
-
-    store.mkdir(exist_ok=True)
-    part = next((store / "_tmp").glob("*.parquet"))
-    shutil.move(str(part), str(store / "legacy.parquet"))
-    shutil.rmtree(store / "_tmp")
-    spark.range(2).selectExpr(
-        "id as doc_id", "id as simhash", "timestamp('2024-01-02') as _ts"
-    ).write.mode("overwrite").parquet(str(store / "batch=0"))
-
-    class _ConnectLike:
-        """Session facade with no py4j gateway (as under Spark
-        Connect) but a working DataFrame reader."""
-
-        _jvm = None
-        _jsc = None
-
-        def __init__(self, inner):
-            self.read = inner.read
-
-    fast = _list_store_layouts(spark, str(store))
-    slow = _list_store_layouts(_ConnectLike(spark), str(store))
-    assert fast[0] is True and slow[0] is True
-    norm = lambda fs: sorted(p.split("/")[-1] for p in fs)  # noqa: E731
-    assert norm(fast[1]) == norm(slow[1]) == ["legacy.parquet"]
-    missing = str(tmp_path / "nope")
-    assert _list_store_layouts(spark, missing) == (False, [])
-    assert _list_store_layouts(_ConnectLike(spark), missing) == (False, [])
-
-
 def _mk_semantic_corpus(spark):
     """9 dim-8 vectors: three clusters of near-identical vectors
     (cosine ~0.999 within, < 0.5 across) with staggered timestamps."""
