@@ -28,6 +28,33 @@ multi-executor cluster at ~100 TB:
   heap and its inputs are logged (INFO, this module's logger) when
   ``get_spark`` launches the JVM, and the test suite prints the same
   line in its report header.
+- Streaming checkpoints commit through Hadoop's FileSystem API
+  (``FileSystemBasedCheckpointFileManager``), not the default FileContext
+  manager. On ``file:`` the FileContext rename reaches
+  ``AbstractFileSystem.renameInternal``, which stats both paths with
+  ``getFileLinkStatus``; without native libhadoop each stat forks a
+  ``readlink`` process, several per checkpoint file. The FileSystem
+  manager renames with ``FileSystem.rename``, which on Hadoop's
+  ``LocalFileSystem`` is one atomic ``rename(2)``. That is as atomic as
+  the default on LOCAL DISK ONLY: for checkpoints on HDFS or an object
+  store, set ``spark.sql.streaming.checkpointFileManagerClass`` to
+  Spark's default, ``...checkpointing.FileContextBasedCheckpointFileManager``,
+  through ``extra_conf``. Spark's checkpoint file checksums wrap either
+  manager and are unchanged.
+- ``file:`` is Hadoop's ``LocalFileSystem`` (``spark.hadoop.fs.file.impl``).
+  PySpark's ``hive-exec`` jar registers Hive's ``ProxyLocalFileSystem``
+  for ``file:``, whose rename returns false when the target exists; the
+  FileSystem manager reads that as "already written", so a replayed
+  batch's state files kept the old copy and left their temp files behind.
+  Hive's class differs from Hadoop's only in that rename. Like the heap,
+  this holds from the call that starts the SparkContext.
+- State stores keep one committed version in memory
+  (``spark.sql.streaming.maxBatchesToRetainInMemory=1``). Spark's
+  default of 2 also keeps the previous version for a task retried
+  after a failure; ``local[N]`` gives each task one attempt, so that
+  copy is memory nothing reads.
+
+``extra_conf`` overrides every setting above.
 """
 
 from __future__ import annotations
@@ -39,6 +66,12 @@ from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+LOCAL_FILE_SYSTEM = "org.apache.hadoop.fs.LocalFileSystem"
 
 _GIB = 1 << 30
 # the heap every host got before the default was sized to the host;
@@ -133,6 +166,13 @@ def get_spark(
         # fixtures.load_tables (runtime-settable, so it also applies when the
         # harness hands us its own session)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # local-disk checkpoints only, see the module docstring
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            CHECKPOINT_FILE_MANAGER,
+        )
+        .config("spark.sql.streaming.maxBatchesToRetainInMemory", "1")
+        .config("spark.hadoop.fs.file.impl", LOCAL_FILE_SYSTEM)
     )
     # opt-in live-Kafka tier (tests/test_kafka_live.py): pull the
     # spark-sql-kafka connector from Maven when the environment has a

@@ -28,6 +28,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 
 def write_text(df: DataFrame, path: str, overwrite: bool = True) -> None:
@@ -469,12 +470,20 @@ def write_kv_lists(
     DEL-then-RPUSH (flink-process Hdfs2RedisVersion5.java:67-92). The
     filter/truncate run as Catalyst expressions BEFORE the shuffle-free
     foreachPartition — only surviving rows leave the JVM.
+
+    `values_col` is an array, or a string of comma-joined entries (the
+    ``item:score,...`` form `itemcf_topn` emits and the reference reads
+    from HDFS), which is split on ',' in Catalyst; empty entries are
+    dropped, so an empty string is an empty list.
     """
-    # NULL elements are removed BEFORE the min_len gate — str(None)
-    # would publish the literal 'None' as an item id (the same
-    # indistinguishable-payload hazard the hash path filters), and a
-    # list padded with NULLs must not pass the length floor on them
-    clean = F.filter(F.col(values_col), lambda v: v.isNotNull())
+    if isinstance(df.schema[values_col].dataType, StringType):
+        clean = F.filter(F.split(F.col(values_col), ","), lambda v: v != "")
+    else:
+        # NULL elements are removed BEFORE the min_len gate — str(None)
+        # would publish the literal 'None' as an item id (the same
+        # indistinguishable-payload hazard the hash path filters), and a
+        # list padded with NULLs must not pass the length floor on them
+        clean = F.filter(F.col(values_col), lambda v: v.isNotNull())
     pruned = (
         df.filter(
             F.col(key_col).isNotNull()  # a NULL key would store 'None'

@@ -124,15 +124,15 @@ def windowed_uv(
     Ref: ActionLogJob.java:255-257,285-329 — the reference pushes user
     ids into an HBase set and reads the size back. Default is
     approx_count_distinct (HLL — the 100 TB answer, no per-user state);
-    exact mode dedups (window,keys,user) first with watermark-scoped
-    state, matching the reference's exact HBase-set semantics.
+    exact mode dedups (window,keys,user) first, keeping each key until
+    the watermark passes its window's end, matching the reference's
+    exact HBase-set semantics across micro-batches.
     SURVEY §4 documents this deviation-by-default.
     """
-    # only EXACT mode needs the watermark inflated to cover the window
-    # (dedup keys must survive until their window closes or reappearing
-    # users double-count); the approx path honors the caller's bound —
-    # inflating it there would both admit ~window-duration-late rows and
-    # delay append-mode emission by a full window for no benefit.
+    # only EXACT mode inflates the watermark to cover the window; the
+    # approx path honors the caller's bound — inflating it there would
+    # both admit ~window-duration-late rows and delay append-mode
+    # emission by a full window for no benefit.
     # DOCUMENTED trade-off: exact mode therefore admits rows up to
     # ~duration late where approx mode drops them past `watermark` —
     # the two modes can differ on heavily-late input by construction,
@@ -144,26 +144,20 @@ def windowed_uv(
     )
     if exact:
         # exact per-window distinct: materialize the window column, then
-        # dedup (window, keys, user). dropDuplicatesWithinWatermark
-        # evicts each dedup key once the watermark passes its event time
-        # — state is bounded by (watermark horizon x arrival rate), the
-        # property that makes exact UV viable at stream scale. Plain
-        # dropDuplicates would also evict here (the state key contains
-        # the event-time-derived window), but the WithinWatermark form
-        # states the contract explicitly and survives key-set changes.
-        # project ONLY the window struct as the event-time column —
-        # keeping the raw ts too gives the stream two event-time columns,
-        # which DeduplicateWithinWatermark rejects
+        # dedup (window, keys, user). The window struct is the one
+        # event-time column in the dedup key, so plain dropDuplicates
+        # evicts a key once the watermark passes the window's END, when
+        # no later row can fall in that window: state is bounded by the
+        # open windows' distinct users. dropDuplicatesWithinWatermark
+        # does not fit a window struct: its state emptied on a no-data
+        # batch while the window was still open, so a user seen in two
+        # micro-batches of one window counted twice.
         w = wm.select(
             F.window(F.col(ts_col), duration).alias("w"), *keys, user_col
         )
-        dedup = (
-            w.dropDuplicatesWithinWatermark(["w", *keys, user_col])
-            if hasattr(w, "dropDuplicatesWithinWatermark") and w.isStreaming
-            else w.dropDuplicates(["w", *keys, user_col])
-        )
         return (
-            dedup.groupBy("w", *keys)
+            w.dropDuplicates(["w", *keys, user_col])
+            .groupBy("w", *keys)
             # count(user_col), not count(1): a NULL user survives dedup
             # as its own group row, but COUNT DISTINCT semantics (the
             # approx path and the batch countDistinct twin) never count

@@ -42,6 +42,28 @@ def test_kv_list_publish_bounds(spark):
     assert store.lists["cf_item_big"] == [f"n{i}" for i in range(4)]
 
 
+def test_kv_list_publish_joined_string(spark):
+    """The joined ``item:score,...`` column `itemcf_topn` emits publishes
+    under the same bounds as an array: split on ',' in Catalyst, with
+    empty entries and NULL strings holding no items."""
+    store_name = f"t_{time.time_ns()}"
+    df = spark.createDataFrame(
+        [
+            ("a", "i1:0.9,i2:0.5,i3:0.1"),  # truncated to max
+            ("b", "i1:0.9"),  # below min -> dropped
+            ("c", ""),  # empty list -> dropped
+            ("d", None),  # NULL -> dropped
+            ("e", "i1:0.2,,i4:0.1"),  # the empty entry is not an item
+        ],
+        "item_id string, neighbors string",
+    )
+    WR.write_kv_lists(
+        df, "item_id", "neighbors", min_len=2, max_len=2, store_name=store_name
+    )
+    store = WR.get_kv_store(store_name)
+    assert store.lists == {"a": ["i1:0.9", "i2:0.5"], "e": ["i1:0.2", "i4:0.1"]}
+
+
 def test_kv_hash_writes(spark):
     store_name = f"t_{time.time_ns()}"
     df = spark.createDataFrame(
@@ -75,8 +97,9 @@ def test_foreach_batch_upsert_in_watermarked_stream(spark, tmp_path):
     """T12 wired into a real `foreachBatch`: a file stream feeds a
     watermarked update-mode day count over 8 state partitions, in two
     slices, so the sink also runs on the watermark-advance (no-data)
-    batches. The store must hold the batch answer, and replaying the
-    last data epoch after a crash before its commit must not change it."""
+    batches. The store must hold the batch answer, replaying the last
+    data epoch after a crash before its commit must not change it, and
+    the checkpoint's state and offset logs hold no temp files after."""
     import json
     import shutil
 
@@ -161,6 +184,16 @@ def test_foreach_batch_upsert_in_watermarked_stream(spark, tmp_path):
         q.stop()
     assert last in epochs
     assert store.hashes == expected
+    # every state and offset file was committed by rename: no temp file
+    # of the session's checkpoint file manager is left behind
+    leftovers = [
+        f
+        for log in ("state", "offsets")
+        for _, _, files in os.walk(os.path.join(ckpt, log))
+        for f in files
+        if ".tmp" in f
+    ]
+    assert not leftovers
     shutil.rmtree(store.root, ignore_errors=True)
 
 

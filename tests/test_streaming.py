@@ -418,6 +418,72 @@ ACTION_JSON_SCHEMA = (
 )
 
 
+def test_windowed_uv_exact_counts_user_once_across_micro_batches(
+    spark, tmp_path
+):
+    """T8 exact mode over micro-batches: users reappear in one hour
+    window in two file slices, with the watermark-advance (no-data)
+    batch between them, and each is still one user. The update-mode
+    output, upserted per key like the KV sink, must equal the batch
+    countDistinct."""
+    import json
+
+    watch, staging = tmp_path / "in", tmp_path / "staging"
+    watch.mkdir()
+    staging.mkdir()
+    slices = [
+        [("12:01", "click", 1), ("12:05", "click", 2), ("12:08", "view", 1)],
+        [("12:24", "click", 1), ("12:31", "click", 3), ("12:40", "view", 1)],
+    ]
+    latest: dict = {}
+    epochs: list[int] = []
+
+    def sink(df, epoch_id):
+        epochs.append(epoch_id)
+        for r in df.collect():
+            latest[(r.window_start, r.event_type)] = r.uv
+
+    schema = "ts timestamp, event_type string, user_id long"
+    stream = spark.readStream.schema(schema).json(str(watch))
+    q = (
+        SW.windowed_uv(stream, "ts", "1 hour", ["event_type"], exact=True)
+        .writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        for i, rows in enumerate(slices):
+            tmp = staging / f"slice_{i}.json"
+            tmp.write_text(
+                "".join(
+                    json.dumps(
+                        {"ts": f"2024-01-08T{t}:00Z", "event_type": e, "user_id": u}
+                    )
+                    + "\n"
+                    for t, e, u in rows
+                )
+            )
+            tmp.rename(watch / tmp.name)
+            q.processAllAvailable()
+        data_epochs = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    finally:
+        q.stop()
+    assert len(data_epochs) == 2
+    assert set(epochs) - set(data_epochs), "no no-data batch ran"
+
+    expected = {
+        (r.w, r.event_type): r.uv
+        for r in spark.read.schema(schema)
+        .json(str(watch))
+        .groupBy(F.window("ts", "1 hour").start.alias("w"), "event_type")
+        .agg(F.countDistinct("user_id").alias("uv"))
+        .collect()
+    }
+    assert latest == expected
+    assert sorted(expected.values()) == [1, 3]
+
+
 def test_kafka_shaped_ingest_chain(spark, tmp_path):
     """S6→P2→T2: the reference's primary streaming ingest path
     (flink-statistics action/ActionLogJob.java:107-135) without a
@@ -528,24 +594,29 @@ def test_exact_uv_day_window_state_bound(spark, tmp_path):
             .start()
         )
         q.processAllAvailable()
-        ops = q.lastProgress["stateOperators"]
+        last = q.lastProgress
+        ops = last["stateOperators"]
         state_rows = sum(op["numRowsTotal"] for op in ops)
-        # rows that passed through the store this batch: still-retained
-        # updates plus watermark-evicted inserts (a single-batch replay
-        # evicts every dedup key whose window the final watermark passed,
-        # so the write volume is updated + removed)
+        dedup_rows = sum(
+            op["numRowsTotal"] for op in ops if op["operatorName"] == "dedupe"
+        )
+        # rows written to the stores over the whole replay: the data
+        # batch inserts, the watermark-advance batch after it evicts
         state_writes = sum(
-            op["numRowsUpdated"] + op["numRowsRemoved"] for op in ops
+            op["numRowsUpdated"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
         )
         q.stop()
         rows = {
             (r.window_start, r.event_type): r.uv
             for r in spark.table(name).collect()
         }
-        return rows, state_rows, state_writes
+        watermark = last["eventTime"]["watermark"]
+        return rows, state_rows, dedup_rows, state_writes, watermark
 
-    exact_rows, exact_state, exact_writes = run(exact=True)
-    approx_rows, approx_state, approx_writes = run(exact=False)
+    exact_rows, exact_state, exact_dedup, exact_writes, exact_wm = run(True)
+    approx_rows, approx_state, _, approx_writes, _ = run(False)
 
     # exact mode reproduces batch countDistinct bit-for-bit
     expected = {(r.w.start, r.event_type): r.uv for r in day_groups}
@@ -561,11 +632,19 @@ def test_exact_uv_day_window_state_bound(spark, tmp_path):
     assert approx_writes <= 2 * n_groups
     # exact mode WRITES one dedup key per distinct (window,key,user)
     # tuple — state cost scales with users — but RETAINED state stays
-    # within the watermark horizon: after the watermark passes a window,
-    # its dedup keys are evicted (here, everything older than
-    # max_ts - 1 day), so long-run state is bounded, not unbounded
+    # within the watermark horizon: once the watermark passes a window's
+    # end, its dedup keys are evicted, and the keys of windows still
+    # open are all kept, so long-run state is bounded, not unbounded
     assert exact_writes >= distinct_tuples
     assert exact_state <= distinct_tuples + n_groups
+    open_tuples = (
+        batch.select(F.window("ts", "1 day").alias("w"), "event_type", "user_id")
+        .distinct()
+        .filter(F.col("w.end") > F.lit(exact_wm).cast("timestamp"))
+        .count()
+    )
+    assert 0 < open_tuples < distinct_tuples
+    assert exact_dedup == open_tuples
 
 
 def test_socket_stream_ingest(spark):
@@ -1138,3 +1217,32 @@ def test_streaming_semantic_dedup_per_document_horizon(spark, tmp_path):
         **kw,
     )
     assert {r["doc_id"] for r in mixed.collect()} == {11}
+
+
+def test_session_checkpoint_settings(spark):
+    """The engine's session commits checkpoints through the FileSystem
+    manager on Hadoop's LocalFileSystem and keeps one state version in
+    memory. The manager class must load in the running JVM: a PySpark
+    upgrade that moves or renames it fails here, not on the first
+    streaming query."""
+    from flink_project_spark.session import (
+        CHECKPOINT_FILE_MANAGER,
+        LOCAL_FILE_SYSTEM,
+    )
+
+    conf = spark.conf
+    assert conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        CHECKPOINT_FILE_MANAGER
+    )
+    assert conf.get("spark.sql.streaming.maxBatchesToRetainInMemory") == "1"
+    # file: resolves to Hadoop's LocalFileSystem, whose rename overwrites
+    local = spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    )
+    assert local.getClass().getName() == LOCAL_FILE_SYSTEM
+    Class = spark._jvm.java.lang.Class
+    manager = Class.forName(CHECKPOINT_FILE_MANAGER)
+    assert Class.forName(
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "CheckpointFileManager"
+    ).isAssignableFrom(manager)
